@@ -13,7 +13,7 @@ Every stage is the already-tested operator (pairs.generate_pairs,
 metablocking.prune_cnp, fs.*, cc.assign_all,
 survivorship.golden_records); this module only wires them. Scale
 notes live with each operator; nothing here adds a collect beyond
-fs's 2K+2 EM scalars per iteration.
+fs's <= 2^K agreement-pattern counts for EM (one aggregate in all).
 """
 
 from __future__ import annotations

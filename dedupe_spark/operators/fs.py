@@ -16,18 +16,21 @@ Parameter estimation, both standard practice:
     almost surely a non-match, so agreement rates on random pairs
     estimate u directly.
   * ``estimate_m_u_em`` — unsupervised EM over binary agreement
-    vectors (the classic two-class latent mixture): the E-step's
-    per-pair match responsibility and the M-step's weighted agreement
-    rates are ONE Spark aggregate per iteration.
+    vectors (the classic two-class latent mixture). A pair enters the
+    E-step only through its agreement pattern, so EM runs exactly over
+    the <= 2^K pattern counts (fastLink's formulation, Enamorado,
+    Fifield & Imai, APSR 2019): ONE Spark aggregate in total, then
+    plain-Python iterations on the driver.
 
 Scale notes (north_rule):
   * scoring is a pure JVM projection over the candidate-pair table —
     all weights are precomputed Python floats embedded as literals, so
     whole-stage codegen keeps the hot path shuffle-free;
-  * EM never collects pair data: each iteration reduces to 2K+2
-    scalars (K = number of comparisons); the agreement table is
-    lineage-truncated once (localCheckpoint, the cc.py idiom) so
-    iteration i doesn't replay i-1 plans;
+  * EM never collects pair data: one ``groupBy(agree_cols).count()``
+    brings at most 2^K (pattern, count) rows to the driver (K = number
+    of comparisons), whatever the pair count; the iterations run no
+    Spark job, and the integer counts in a fixed pattern order make the
+    estimates bit-identical at any partitioning;
   * ``random_pairs`` reuses ``snm.distributed_rank`` — no global
     single-task sort, no RNG (xxhash64 of the id ⇒ identical pairing
     at any parallelism);
@@ -235,9 +238,12 @@ def estimate_m_u_em(
 
     E-step: r = λ·Π m^γ(1-m)^(1-γ) / (that + (1-λ)·Π u^γ(1-u)^(1-γ)).
     M-step: m_k = Σ r·γ_k / Σ r, u_k = Σ (1-r)·γ_k / Σ (1-r),
-    λ = Σ r / n. Each iteration is ONE aggregate producing 2K+2
-    scalars; pair rows never reach the driver. Parameters are clamped
-    to [eps, 1-eps] so a degenerate corpus can't zero a likelihood.
+    λ = Σ r / n. r depends on a pair only through its pattern γ, so
+    every sum is a count-weighted sum over the distinct patterns: ONE
+    Spark aggregate returns at most 2^K (pattern, count) rows and the
+    iterations run on the driver. A NULL agreement value counts as
+    disagreement. Parameters are clamped to [eps, 1-eps] so a
+    degenerate corpus can't zero a likelihood.
 
     Identifiability caveat (standard for this model): with fewer than
     3 comparisons the binary mixture has more parameters than
@@ -247,10 +253,15 @@ def estimate_m_u_em(
     """
     if n_iter <= 0:
         raise ValueError(f"estimate_m_u_em: n_iter must be positive, got {n_iter}")
-    g = pairs.select(
-        *[F.col(c).cast("double").alias(c) for c in agree_cols]
-    ).localCheckpoint(eager=True)
-    n = g.count()
+    agrees = [
+        F.coalesce(F.col(c).cast("double") > 0.5, F.lit(False)).alias(c)
+        for c in agree_cols
+    ]
+    # sorted: a fixed summation order, whatever order the rows arrive in
+    patterns = sorted(
+        (r[:-1], r[-1]) for r in pairs.groupBy(*agrees).count().collect()
+    )
+    n = sum(cnt for _, cnt in patterns)
     if n == 0:
         raise ValueError("estimate_m_u_em: empty pair table")
 
@@ -261,27 +272,28 @@ def estimate_m_u_em(
     u = {c: init_u for c in agree_cols}
     lam = init_lambda
     for _ in range(n_iter):
-        num = F.lit(lam)
-        den = F.lit(1.0 - lam)
-        for c in agree_cols:
-            num = num * F.when(F.col(c) > 0.5, F.lit(m[c])).otherwise(F.lit(1.0 - m[c]))
-            den = den * F.when(F.col(c) > 0.5, F.lit(u[c])).otherwise(F.lit(1.0 - u[c]))
-        # double underflow guard: with many features the two literal
-        # products can BOTH underflow to 0.0 (num+den == 0 → 0/0 → NaN
-        # poisons every sum); an uninformative 0.5 keeps EM moving
-        r = (
-            F.when(num + den == 0.0, F.lit(0.5)).otherwise(num / (num + den))
-        ).alias("_r")
-        agged = g.select(r, *agree_cols).agg(
-            F.sum("_r").alias("_sr"),
-            *[F.sum(F.col(c) * F.col("_r")).alias(f"_m_{c}") for c in agree_cols],
-            *[F.sum(F.col(c) * (1.0 - F.col("_r"))).alias(f"_u_{c}") for c in agree_cols],
-        ).first()
-        sr = float(agged["_sr"])
+        sr = 0.0
+        sm = {c: 0.0 for c in agree_cols}
+        su = {c: 0.0 for c in agree_cols}
+        for gamma, cnt in patterns:
+            num = lam
+            den = 1.0 - lam
+            for c, g in zip(agree_cols, gamma):
+                num *= m[c] if g else 1.0 - m[c]
+                den *= u[c] if g else 1.0 - u[c]
+            # double underflow guard: with many features both products
+            # can underflow to 0.0 (0/0 → NaN would poison every sum);
+            # an uninformative 0.5 keeps EM moving
+            r = 0.5 if num + den == 0.0 else num / (num + den)
+            sr += cnt * r
+            for c, g in zip(agree_cols, gamma):
+                if g:
+                    sm[c] += cnt * r
+                    su[c] += cnt * (1.0 - r)
         snr = n - sr
         if sr <= 0.0 or snr <= 0.0:
             break  # all mass on one class — nothing left to estimate
-        m = {c: clamp(float(agged[f"_m_{c}"]) / sr) for c in agree_cols}
-        u = {c: clamp(float(agged[f"_u_{c}"]) / snr) for c in agree_cols}
+        m = {c: clamp(sm[c] / sr) for c in agree_cols}
+        u = {c: clamp(su[c] / snr) for c in agree_cols}
         lam = clamp(sr / n)
     return m, u, lam

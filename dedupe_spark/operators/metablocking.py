@@ -33,8 +33,8 @@ Scale notes (north_rule):
     block-count table;
   * WEP's global mean is a 1-row aggregate joined back on a constant
     key (broadcast) — no collect of edge data, no second pass ordering;
-  * CNP is two per-node top-k windows (partitioned by endpoint —
-    parallel, never a global sort).
+  * CNP is one per-node top-k window over the symmetrised edges
+    (partitioned by node — parallel, never a global sort).
 """
 
 from __future__ import annotations
@@ -125,17 +125,24 @@ def prune_cnp(edges: DataFrame, k: int, weight_col: str = "weight") -> DataFrame
     weighted edges of AT LEAST ONE endpoint (the recall-oriented
     redistribution variant).
 
-    Two windows partitioned by endpoint — per-node sorts run in
-    parallel; ties break on the opposite endpoint id so the survivor
-    set is deterministic at any parallelism.
+    Each edge is emitted once per endpoint, so a node's whole
+    neighbourhood — edges where it is id1 and where it is id2 — shares
+    one window partitioned by node; per-node sorts run in parallel.
+    Ties break on the partner id so the survivor set is deterministic
+    at any parallelism.
     """
     if k <= 0:
         raise ValueError(f"prune_cnp: k must be positive, got {k}")
-    w1 = Window.partitionBy("id1").orderBy(F.desc(weight_col), F.asc("id2"))
-    w2 = Window.partitionBy("id2").orderBy(F.desc(weight_col), F.asc("id1"))
-    ranked = edges.withColumn("_cnp_r1", F.row_number().over(w1)).withColumn(
-        "_cnp_r2", F.row_number().over(w2)
+    by_id1, by_id2 = (
+        edges.select("*", F.col(a).alias("_cnp_node"), F.col(b).alias("_cnp_other"))
+        for a, b in (("id1", "id2"), ("id2", "id1"))
     )
-    return ranked.where(
-        (F.col("_cnp_r1") <= k) | (F.col("_cnp_r2") <= k)
-    ).drop("_cnp_r1", "_cnp_r2")
+    sym = by_id1.unionByName(by_id2)
+    w = Window.partitionBy("_cnp_node").orderBy(F.desc(weight_col), F.asc("_cnp_other"))
+    # an edge both endpoints keep arrives twice: keep one copy
+    return (
+        sym.withColumn("_cnp_r", F.row_number().over(w))
+        .where(F.col("_cnp_r") <= k)
+        .select(*edges.columns)
+        .dropDuplicates(["id1", "id2"])
+    )

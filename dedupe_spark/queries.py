@@ -2445,7 +2445,11 @@ def q_meta_blocking_pairs(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
     )
-    g = blocking_graph(keys, weight="js", max_block_size=64)
+    # prune_wep reads the graph twice (mean, then filter):
+    # checkpoint-to-scratch so the graph is built once
+    g = materialize(
+        blocking_graph(keys, weight="js", max_block_size=64), "meta_blocking_graph"
+    )
     # WEP thresholds on the INTEGER cbs weight: avg of exact ints is
     # bit-identical across engines; a mean over double js weights is
     # summation-order sensitive and could flip boundary edges.

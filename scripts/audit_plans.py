@@ -99,9 +99,10 @@ EXPECTATIONS = {
     "boilerplate_removal": ([], ["Exchange", "CartesianProduct", "HashAggregate", "Generate", "Window", "SortMergeJoin", "BroadcastHashJoin"]),
     # SemDeDup: cell-scoped equi-join pairs + CC — never a cross product
     "semantic_dedup_groups": ([], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
-    # blocking graph: per-block equi-joins + map-side-combined CBS agg;
-    # the WEP mean is a broadcast 1-row join, never a cross product
-    "meta_blocking_pairs": (["BroadcastHashJoin", "HashAggregate"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
+    # the blocking graph is materialized before WEP, so the returned
+    # plan is a scan of it + the literal mean filter: no join or
+    # aggregate (the graph is never rebuilt), never a cross product
+    "meta_blocking_pairs": (["Filter"], ["Exchange", "HashAggregate", "BroadcastHashJoin", "SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin"]),
     # two-phase rank: per-bucket windows + broadcast offsets; the
     # neighborhood is a rank equi-join — no inequality join anywhere
     "sorted_neighborhood_pairs": (["Window", "BroadcastHashJoin"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),

@@ -28,11 +28,25 @@ def test_metrics_match_hand_computation(spark):
     m = blocking_quality(cand, _truth(spark))
     assert m["n_records"] == 6           # NULL-truth doc excluded
     assert m["n_true_pairs"] == 4
-    assert m["n_candidates"] == 5
-    assert m["n_true_candidates"] == 3   # (1,2),(2,3),(4,5); (1,7) unlabeled
+    assert m["n_candidates"] == 4        # (1,7) unlabeled: not judged
+    assert m["n_true_candidates"] == 3   # (1,2),(2,3),(4,5)
     assert m["pair_completeness"] == pytest.approx(3 / 4)
-    assert m["reduction_ratio"] == pytest.approx(1 - 5 / 15)
-    assert m["pairs_quality"] == pytest.approx(3 / 5)
+    assert m["reduction_ratio"] == pytest.approx(1 - 4 / 15)
+    assert m["pairs_quality"] == pytest.approx(3 / 4)
+
+
+def test_unlabeled_endpoints_are_not_candidates(spark):
+    """Many candidates touching unlabeled records (NULL truth key, or
+    no truth row at all) must not push RR below 0 or deflate PQ."""
+    unlabeled = [(10 + i, 20 + i) for i in range(30)] + [(1, 7), (7, 99)]
+    cand = _pairs(spark, [(1, 2), (4, 5)] + unlabeled)
+    m = blocking_quality(cand, _truth(spark))
+    assert m["n_candidates"] == 2
+    assert m["n_true_candidates"] == 2
+    assert 0.0 <= m["reduction_ratio"] <= 1.0
+    assert m["reduction_ratio"] == pytest.approx(1 - 2 / 15)
+    assert m["pairs_quality"] == 1.0
+    assert m["pair_completeness"] == pytest.approx(2 / 4)
 
 
 def test_empty_candidates(spark):

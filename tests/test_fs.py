@@ -1,6 +1,7 @@
 """Fellegi–Sunter: weights/probabilities against a pure-Python oracle,
 parameter validation, deterministic random pairing, u-estimation
-against the analytic value, and EM recovery of planted parameters."""
+against the analytic value, EM recovery of planted parameters, and
+the pattern-count EM against a per-row pure-Python EM oracle."""
 
 from __future__ import annotations
 
@@ -147,6 +148,100 @@ def test_em_recovers_planted_parameters(spark):
     )
     by_class = {r["is_match"]: r["p"] for r in means}
     assert by_class[True] > 0.5 > by_class[False]
+
+
+def _em_oracle(rows, n_iter, init_m=0.9, init_u=0.1, init_lambda=0.1, eps=1e-6):
+    """Per-row EM over agreement rows (tuples of bool/None): each pair
+    gets its own responsibility r, and the M-step sums r over the rows.
+    A value counts as agreement iff it is not NULL and > 0.5."""
+    k = len(rows[0])
+    n = len(rows)
+
+    def clamp(x):
+        return min(1.0 - eps, max(eps, x))
+
+    m, u, lam = [init_m] * k, [init_u] * k, init_lambda
+    for _ in range(n_iter):
+        sr, sm, su = 0.0, [0.0] * k, [0.0] * k
+        for row in rows:
+            num, den = lam, 1.0 - lam
+            for j, v in enumerate(row):
+                agree = v is not None and float(v) > 0.5
+                num *= m[j] if agree else 1.0 - m[j]
+                den *= u[j] if agree else 1.0 - u[j]
+            r = 0.5 if num + den == 0.0 else num / (num + den)
+            sr += r
+            for j, v in enumerate(row):
+                if v is not None:
+                    sm[j] += float(v) * r
+                    su[j] += float(v) * (1.0 - r)
+        snr = n - sr
+        if sr <= 0.0 or snr <= 0.0:
+            break
+        m = [clamp(x / sr) for x in sm]
+        u = [clamp(x / snr) for x in su]
+        lam = clamp(sr / n)
+    return m, u, lam
+
+
+def _assert_matches_oracle(df, cols, n_iter, **init):
+    rows = [tuple(r) for r in df.select(*cols).collect()]
+    em, eu, elam = _em_oracle(rows, n_iter, **init)
+    m, u, lam = estimate_m_u_em(df, cols, n_iter=n_iter, **init)
+    for j, c in enumerate(cols):
+        assert abs(m[c] - em[j]) <= 1e-12
+        assert abs(u[c] - eu[j]) <= 1e-12
+    assert abs(lam - elam) <= 1e-12
+
+
+def test_em_matches_per_row_oracle(spark):
+    df, _, _ = _planted_pairs(spark)
+    cols = ["agree_a", "agree_b", "agree_c"]
+    _assert_matches_oracle(df, cols, n_iter=40)
+    # the linkage job's initialisation
+    _assert_matches_oracle(df, cols, n_iter=15, init_m=0.95, init_u=0.3)
+
+
+def test_em_counts_null_as_disagreement(spark):
+    rng = random.Random(7)
+    rows = []
+    for _ in range(3000):
+        match = rng.random() < 0.25
+        p = (0.9, 0.8, 0.85) if match else (0.1, 0.2, 0.05)
+        rows.append(
+            tuple(None if rng.random() < 0.1 else rng.random() < q for q in p)
+        )
+    df = spark.createDataFrame(rows, "agree_a boolean, agree_b boolean, agree_c boolean")
+    cols = ["agree_a", "agree_b", "agree_c"]
+    assert df.where(F.col("agree_b").isNull()).count() > 0
+    _assert_matches_oracle(df, cols, n_iter=30)
+    # NULL and false are the same pattern
+    filled = df.na.fill(False)
+    assert estimate_m_u_em(df, cols, n_iter=30) == estimate_m_u_em(filled, cols, n_iter=30)
+
+
+def test_em_bit_identical_across_partitionings(spark):
+    df, _, _ = _planted_pairs(spark)
+    cols = ["agree_a", "agree_b", "agree_c"]
+    one = estimate_m_u_em(df.repartition(1), cols, n_iter=40)
+    many = estimate_m_u_em(df.repartition(16), cols, n_iter=40)
+    assert one == many
+
+
+def test_em_job_count_independent_of_iterations(spark):
+    df, _, _ = _planted_pairs(spark)
+    cols = ["agree_a", "agree_b", "agree_c"]
+    df = df.select(*cols)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_for(n_iter):
+        before = set(tracker.getJobIdsForGroup(None))
+        estimate_m_u_em(df, cols, n_iter=n_iter)
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    one = jobs_for(1)
+    assert one > 0
+    assert jobs_for(40) == one
 
 
 def test_em_validation(spark):

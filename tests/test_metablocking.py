@@ -113,6 +113,48 @@ def test_cnp_top_k_either_endpoint(spark):
     assert len(kept) < len(exp)
 
 
+def _cnp_oracle(edges: dict[tuple[int, int], int], k: int) -> set:
+    """Union over nodes of each node's top-k edges, ranked over its
+    whole neighbourhood by (weight desc, partner id asc)."""
+    nbrs: dict[int, list] = {}
+    for (a, b), w in edges.items():
+        nbrs.setdefault(a, []).append((-w, b, (a, b)))
+        nbrs.setdefault(b, []).append((-w, a, (a, b)))
+    return {e for ranked in nbrs.values() for _, _, e in sorted(ranked)[:k]}
+
+
+def _edges_df(spark, edges: dict[tuple[int, int], int]):
+    return spark.createDataFrame(
+        [(a, b, w) for (a, b), w in edges.items()], "id1 long, id2 long, weight long"
+    )
+
+
+def test_cnp_ranks_whole_neighbourhood(spark):
+    """Node 5's edges split across sides: it is id2 of (1,5) and id1 of
+    (5,9). Its top-1 is (1,5); node 9's top-1 is (8,9) — so (5,9) is in
+    no endpoint's top-1 and must go."""
+    edges = {(1, 2): 5, (1, 5): 3, (5, 9): 2, (8, 9): 5}
+    kept = {(r["id1"], r["id2"]) for r in prune_cnp(_edges_df(spark, edges), k=1).collect()}
+    assert kept == _cnp_oracle(edges, 1) == {(1, 2), (1, 5), (8, 9)}
+
+
+def test_cnp_matches_oracle_on_random_graph(spark):
+    import random
+
+    rng = random.Random(3)
+    edges = {}
+    for _ in range(300):
+        a, b = rng.sample(range(40), 2)
+        edges[(min(a, b), max(a, b))] = rng.randint(1, 4)
+    df = _edges_df(spark, edges)
+    for k in (1, 2, 5):
+        rows = prune_cnp(df, k=k).collect()
+        kept = {(r["id1"], r["id2"]) for r in rows}
+        assert len(rows) == len(kept)  # each kept edge once
+        assert kept == _cnp_oracle(edges, k)
+        assert all(r["weight"] == edges[(r["id1"], r["id2"])] for r in rows)
+
+
 def test_cnp_rejects_bad_k(spark):
     import pytest
 
